@@ -141,9 +141,8 @@ def main() -> None:
     pr_steady, pr_median = pr_min_of_k("pagerank_sql_5iter", {})
     extras["pagerank_sql"] = pr_extras(pr_steady, pr_median)
 
-    # kernel="csr" routes to "sem" (the cogrouped V2 kernel pays O(E) Arrow
-    # per superstep and is retired from the hot path; it remains covered by
-    # the csr_cogroup equivalence tests and the csr correctness query)
+    # the semi-external kernel; sem ≡ sql is pinned by the pytest
+    # equivalence gate and the graph_pagerank_5iter_sem driver query
     sem_steady, sem_median = pr_min_of_k("pagerank_sem_5iter", {"kernel": "sem"})
     extras["pagerank_sem"] = pr_extras(sem_steady, sem_median)
 

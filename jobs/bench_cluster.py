@@ -115,7 +115,7 @@ def run_pagerank(n_exec: int, args, kernel: str) -> dict:
             "--partitions", str(args.partitions),
         ]
     else:
-        edges = args.tc_edges if kernel in ("tc", "tc_adj") else args.edges
+        edges = args.tc_edges if kernel == "tc" else args.edges
         cmd += [
             os.path.join(REPO, "jobs", "bench_program.py"),
             "--program", kernel,
@@ -283,7 +283,7 @@ def render_md(args, results, shuffle_ctrl) -> str:
         "executor-side Python workers fed via `spark-submit --py-files",
         "linkgraph.zip`, torrent broadcast, block-manager shuffle between",
         "JVMs. This exercises every executor-boundary mechanism that",
-        "single-JVM `local[N]` mode fakes (the csr->sem layout-reachability",
+        "single-JVM `local[N]` mode fakes (the sem layout-reachability",
         "guard, worker-side sem image reads, broadcast of hub/pivot tables),",
         "while still sharing one box's memory bandwidth — so the matching",
         "single-box ceiling (shuffle control, same session) is reported",

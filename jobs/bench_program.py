@@ -31,7 +31,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--program",
-                    choices=["wcc", "wcc_star", "lp", "tc", "tc_adj", "delta"],
+                    choices=["wcc", "wcc_star", "lp", "tc", "delta"],
                     required=True)
     ap.add_argument("--vertices", type=int, default=1_000_000)
     ap.add_argument("--edges", type=int, default=50_000_000)
@@ -93,11 +93,8 @@ def main() -> None:
                 ).iterations
             elif args.program == "wcc_star":
                 n_rounds = wcc_star(spark, edges).iterations
-            else:  # tc / tc_adj — one DataFrame job; collapse to a scalar
-                kern = "adj" if args.program == "tc_adj" else "wedge"
-                triangle_counts(spark, edges, kernel=kern).agg(
-                    {"tri": "sum"}
-                ).collect()
+            else:  # tc — one DataFrame job; collapse to a scalar
+                triangle_counts(spark, edges).agg({"tri": "sum"}).collect()
                 n_rounds = 1
             per_iter.append(time.monotonic() - r0)
     total = time.monotonic() - t0

@@ -164,14 +164,8 @@ def main() -> None:
             .filter(F.col("src_id") != F.col("dst_id"))
             .distinct()
         )
-        try:
-            ls = wcc_mod._large_star(e0, dedup=False, partitions=partitions)
-            ss = wcc_mod._small_star(
-                ls, partitions=partitions, assume_oriented=True
-            )
-        except TypeError:  # round-start signature (no partitions arg)
-            ls = wcc_mod._large_star(e0, dedup=False)
-            ss = wcc_mod._small_star(ls)
+        ls = wcc_mod._large_star(e0, partitions=partitions)
+        ss = wcc_mod._small_star(ls, partitions=partitions, assume_oriented=True)
         dump("wcc_star_round", ss)
 
         # lp superstep (repart kernel, unrestricted round)

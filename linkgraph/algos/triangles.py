@@ -68,24 +68,14 @@ def triangle_counts(
     spark: SparkSession,
     edges: DataFrame,
     vertices: DataFrame | None = None,
-    kernel: str = "wedge",
 ) -> DataFrame:
     """Per-vertex triangle counts; returns DataFrame(id, tri).
 
-    Two kernels over the same degree-ordered orientation (equivalence
-    pytest-pinned; the default is the measured winner on the bench graph,
-    verdict in BENCH/BASELINE.md "Triangle kernel A/B"):
-
-    - ``wedge``: self-join on the low endpoint generates candidate wedges
-      as rows, closed by a join against the oriented edge set. The
-      intermediate is O(Σ outdeg²) ROWS through the exchange.
-    - ``adj``: build each vertex's oriented out-list once
-      (collect_list), then per oriented edge (u, v) the triangles through
-      it are ``array_intersect(adj[u], adj[v])`` — the same candidate set
-      stays PACKED in long arrays intersected JVM-side, so the exchange
-      carries O(Σ outdeg²) array ELEMENTS instead of wedge rows (no
-      per-row shuffle/hash overhead), at the cost of duplicating adj[u]
-      across u's out-edges.
+    Wedge kernel over the degree-ordered orientation: a self-join on the
+    low endpoint generates candidate wedges as rows, closed by a join
+    against the oriented edge set — O(Σ outdeg²) rows through the
+    exchange. A packed-adjacency variant scaled worse across JVMs;
+    verdict in BENCH/BASELINE.md, "Triangle kernel A/B".
 
     Deliberately UNCACHED: the multiply-referenced subtrees (und,
     oriented) end in shuffles, and Spark's ReusedExchange dedups
@@ -93,37 +83,9 @@ def triangle_counts(
     per reference, while persisting these intermediates measured ~8x
     slower (forced materialization + InMemoryRelation scan overhead in
     place of a streamed exchange reuse)."""
-    if kernel not in ("wedge", "adj"):
-        raise ValueError(f"unknown triangle kernel: {kernel!r}")
     und = _canonical_undirected(edges)
     oriented = _oriented_edges(und)
     ids = vertices.select("id") if vertices is not None else vertex_ids_from_edges(edges)
-
-    if kernel == "adj":
-        adj = oriented.groupBy("lo").agg(F.sort_array(F.collect_list("hi")).alias("nbrs"))
-        closed = (
-            oriented.select("lo", "hi")
-            .join(adj.withColumnRenamed("nbrs", "n_lo"), "lo")
-            .join(
-                adj.select(F.col("lo").alias("hi"), F.col("nbrs").alias("n_hi")),
-                "hi",
-            )
-            .select("lo", "hi", F.array_intersect("n_lo", "n_hi").alias("ws"))
-            .filter(F.size("ws") > 0)
-        )
-        contrib = (
-            closed.select(F.col("lo").alias("id"), F.size("ws").cast("long").alias("n"))
-            .unionByName(
-                closed.select(F.col("hi").alias("id"), F.size("ws").cast("long").alias("n"))
-            )
-            .unionByName(
-                closed.select(F.explode("ws").alias("id"), F.lit(1).cast("long").alias("n"))
-            )
-        )
-        counts = contrib.groupBy("id").agg(F.sum("n").alias("tri"))
-        return ids.join(counts, "id", "left").select(
-            "id", F.coalesce("tri", F.lit(0)).cast("long").alias("tri")
-        )
 
     e1 = oriented.select(F.col("lo").alias("u"), F.col("hi").alias("v"), F.col("key_hi").alias("kv"))
     e2 = oriented.select(F.col("lo").alias("u"), F.col("hi").alias("w"), F.col("key_hi").alias("kw"))

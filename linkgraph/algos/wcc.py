@@ -173,21 +173,18 @@ def _neighborhoods(e: DataFrame) -> DataFrame:
     )
 
 
-def _large_star(e: DataFrame, dedup: bool = True, partitions: int | None = None) -> DataFrame:
+def _large_star(e: DataFrame, partitions: int | None = None) -> DataFrame:
     """For each center u with m = min(N(u) ∪ {u}): link every neighbor
     v > u to m (Kiveris et al., "Connected Components in MapReduce and
     Beyond", alternating algorithm).
 
-    ``dedup`` controls the INTERMEDIATE distinct only (small-star's output
-    distinct is the round's contract — the fixpoint checksum runs on a
-    deduped multiset). The intermediate is bounded at one row per
-    (center, >-neighbor) pair — <= 2|E| with or without dedup, and each
-    round's deduped OUTPUT resets the bound, so skipping it cannot
-    compound across rounds; duplicates pass harmlessly through
-    small-star's min-agg and are removed by its output distinct.
-    Interleaved A/B on the 5M-edge bench graph (jobs/ab_wccstar_dedup.py,
-    checksum-equal arms): skipping the shuffle is 27% faster per fixpoint
-    (18.7s vs 25.4s min-of-2), hence the default; BENCH/BASELINE.md.
+    The output is NOT deduplicated: small-star's output distinct is the
+    round's contract (the fixpoint checksum runs on a deduped multiset).
+    This intermediate is bounded at one row per (center, >-neighbor) pair
+    — <= 2|E| — and each round's deduped OUTPUT resets the bound, so the
+    duplicates cannot compound across rounds; they pass harmlessly through
+    small-star's min-agg. An intermediate distinct measured 27% slower
+    per fixpoint (BENCH/BASELINE.md, "wcc_star intermediate distinct").
 
     Plan note (r6): a shared explicit repartition of the neighborhoods
     feeding both the min-agg and the join was tried and REFUTED by the
@@ -201,13 +198,12 @@ def _large_star(e: DataFrame, dedup: bool = True, partitions: int | None = None)
     nb = _neighborhoods(e)
     m = nb.groupBy("src_id").agg(F.min("dst_id").alias("__mn"))
     m = m.select("src_id", F.least("__mn", "src_id").alias("__m"))
-    out = (
+    return (
         nb.filter(F.col("dst_id") > F.col("src_id"))
         .join(m, "src_id")
         .select(F.col("dst_id").alias("src_id"), F.col("__m").alias("dst_id"))
         .filter(F.col("src_id") != F.col("dst_id"))
     )
-    return out.distinct() if dedup else out
 
 
 def _small_star(
@@ -253,7 +249,6 @@ def wcc_star(
     max_iters: int = 50,
     engine: SuperstepEngine | None = None,
     resume: bool = False,
-    dedup_intermediate: bool = False,
 ) -> RunResult:
     """WCC by alternating large-star/small-star contraction — O(log n)
     rounds instead of O(diameter), the right kernel for web-scale graphs
@@ -277,7 +272,7 @@ def wcc_star(
 
     def step(e: DataFrame, iteration: int) -> DataFrame:
         return _small_star(
-            _large_star(e, dedup=dedup_intermediate, partitions=partitions),
+            _large_star(e, partitions=partitions),
             partitions=partitions,
             # large-star output is oriented dst < src by construction —
             # skip the neighborhoods union that would re-execute the

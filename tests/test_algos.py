@@ -30,24 +30,6 @@ def test_pagerank_converged_matches_golden(spark, wiki_edges_df, wiki_vertices_d
     assert np.allclose(got, want, rtol=0, atol=1e-6)
 
 
-def test_pagerank_csr_equals_sql_kernel(spark, wiki_edges_df, wiki_vertices_df, wiki_edges):
-    """V2 cogroup ≡ V1 within 1e-12 (SURVEY.md §4.1) on a 15-iteration run.
-
-    kernel="csr" routes to sem in production (the cogroup kernel pays O(E)
-    Arrow per superstep); "csr_cogroup" pins the raw V2 kernel for this
-    equivalence check."""
-    sql_r = pagerank(spark, wiki_edges_df, vertices=wiki_vertices_df, max_iters=15, eps=0.0)
-    csr_r = pagerank(
-        spark, wiki_edges_df, vertices=wiki_vertices_df, max_iters=15, eps=0.0,
-        kernel="csr_cogroup", partitions=8,
-    )
-    a = _vec(sql_r.state.select("id", "rank"), "rank")
-    b = _vec(csr_r.state.select("id", "rank"), "rank")
-    assert np.allclose(a, b, rtol=0, atol=1e-12)
-    want, _ = oracle.pagerank(wiki_edges, WIKI_VOTE_N, max_iters=15, eps=0.0)
-    assert np.allclose(a, want, rtol=0, atol=1e-12)
-
-
 def test_pagerank_sem_equals_sql_kernel(spark, wiki_edges_df, wiki_vertices_df, tmp_path):
     """V3 "sem" (semi-external adjacency blocks, worker-cached) ≡ V1 within
     1e-12, including the vertex-cut path (forced low hub threshold)."""
@@ -252,23 +234,6 @@ def test_lp_exact(spark, wiki_edges_df, wiki_vertices_df):
     assert res.metrics[0]["changed_labels"] > 0
 
 
-def test_lp_agg_kernels_equivalent(spark, wiki_edges_df, wiki_vertices_df):
-    """All three LP aggregation kernels (two_level / mode / repart) produce
-    identical labels == golden on the wiki fixture. The tie-break is part
-    of the pinned convention — a kernel that differs on ties is WRONG, not
-    merely different (mode relies on Spark's deterministic-mode
-    lowest-value tie-break; repart on exchange-free two-level aggs)."""
-    want = golden("labels").sort_values("id")["label"].to_numpy()
-    for agg in ("two_level", "mode", "repart"):
-        res = label_propagation(
-            spark, wiki_edges_df, vertices=wiki_vertices_df, agg=agg
-        )
-        got = _vec(res.state.select("id", "label"), "label")
-        assert (got == want).all(), agg
-    with pytest.raises(ValueError):
-        label_propagation(spark, wiki_edges_df, agg="nope")
-
-
 def test_lp_frontier_gather_exact_equivalence(spark, wiki_edges_df, wiki_vertices_df):
     """The frontier-restricted gather (update computed only for dsts with
     >= 1 changed neighbor once the changed fraction drops under the gate)
@@ -296,18 +261,6 @@ def test_lp_frontier_gather_exact_equivalence(spark, wiki_edges_df, wiki_vertice
 
 def test_triangles_exact(spark, wiki_edges_df, wiki_vertices_df):
     got = _vec(triangle_counts(spark, wiki_edges_df, vertices=wiki_vertices_df), "tri")
-    want = golden("triangles").sort_values("id")["tri"].to_numpy()
-    assert (got == want).all()
-
-
-def test_triangles_adj_kernel_equivalent(spark, wiki_edges_df, wiki_vertices_df):
-    """The packed array_intersect kernel == the wedge-join kernel == golden,
-    exactly, on the wiki fixture (both share the degree-ordered
-    orientation; only the closure enumeration differs)."""
-    got = _vec(
-        triangle_counts(spark, wiki_edges_df, vertices=wiki_vertices_df, kernel="adj"),
-        "tri",
-    )
     want = golden("triangles").sort_values("id")["tri"].to_numpy()
     assert (got == want).all()
 
@@ -379,8 +332,8 @@ def test_kcore_matches_networkx(spark, wiki_edges_df, wiki_vertices_df, wiki_edg
 
 
 @pytest.mark.slow
-def test_hub_stress_vertex_cut(spark):
-    """CSR kernel with a forced low hub threshold == oracle on the
+def test_hub_stress_vertex_cut(spark, tmp_path):
+    """sem kernel with a forced low hub threshold == oracle on the
     hub-heavy fixture (vertex-cut splitting path exercised for real)."""
     from linkgraph.synth import HUB_STRESS_N, edges_df, hub_stress_edges
 
@@ -389,7 +342,8 @@ def test_hub_stress_vertex_cut(spark):
     verts = spark.range(HUB_STRESS_N).selectExpr("id")
     res = pagerank(
         spark, e, vertices=verts, max_iters=5, eps=0.0,
-        kernel="csr_cogroup", partitions=8, hub_threshold=100,
+        kernel="sem", partitions=8, hub_threshold=100,
+        layout_dir=str(tmp_path / "sem_layout"),
     )
     got = _vec_n(res.state.select("id", "rank"), "rank", HUB_STRESS_N)
     want, _ = oracle.pagerank(arr, HUB_STRESS_N, max_iters=5, eps=0.0)

@@ -309,10 +309,32 @@ def test_fresh_run_rotates_default_metrics_file(spark, tmp_path):
 
 def test_pagerank_rejects_salted_on_non_sql_kernels(spark, wiki_edges_df):
     """salted=True only has an implementation on the sql kernel; the
-    csr/sem kernels carry their own skew mitigation (hub vertex-cut).
+    sem kernel carries its own skew mitigation (hub vertex-cut).
     Silently ignoring the flag would make a salted-vs-plain benchmark on
-    those kernels measure two identical runs — refuse instead."""
+    it measure two identical runs — refuse instead."""
     import pytest
 
     with pytest.raises(ValueError, match="salted"):
-        pagerank(spark, wiki_edges_df, max_iters=1, kernel="csr_cogroup", salted=True)
+        pagerank(spark, wiki_edges_df, max_iters=1, kernel="sem", salted=True)
+
+
+def test_pagerank_rejects_unknown_kernel_before_any_job(spark, wiki_edges_df):
+    """An unknown kernel name — including the removed cogroup kernel's
+    "csr" selector — must raise before the O(E) setup (partition sizing
+    counts the edges, then the gather layout is built): zero Spark jobs."""
+    import pytest
+
+    from linkgraph.algos import pagerank_delta
+
+    sc = spark.sparkContext
+    group = "pr_unknown_kernel"
+    sc.setJobGroup(group, group)
+    try:
+        for kernel in ("csr", "no_such_kernel"):
+            with pytest.raises(ValueError, match="unknown kernel"):
+                pagerank(spark, wiki_edges_df, max_iters=1, kernel=kernel)
+            with pytest.raises(ValueError, match="unknown kernel"):
+                pagerank_delta(spark, wiki_edges_df, max_iters=1, kernel=kernel)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []

@@ -253,8 +253,8 @@ def test_lp_repart_superstep_single_exchange(spark):
     repartition on dst_id. HashPartitioning(dst_id) satisfies the
     clustered distribution of BOTH aggregations — groupBy(dst,label) and
     the groupBy(dst) argmax — so a second Exchange anywhere means Catalyst
-    stopped recognizing that and the kernel silently regressed to
-    two_level's two-exchange shape. Pins the SHIPPED pipeline
+    stopped recognizing that and the kernel silently regressed to a
+    two-exchange shape. Pins the SHIPPED pipeline
     (labelprop.repart_winners), not a hand-rebuilt replica (r5 ADVICE):
     if the production kernel drops the repartition or renames the
     column, this fails."""

@@ -139,10 +139,6 @@ def test_spark_engine_matches_oracle_random(spark, n, m, seed):
     got = tc.toPandas().sort_values("id")["tri"].to_numpy()
     assert (got == oracle.triangle_counts(arr, n)).all()
 
-    tca = triangle_counts(spark, e, vertices=verts, kernel="adj")
-    got = tca.toPandas().sort_values("id")["tri"].to_numpy()
-    assert (got == oracle.triangle_counts(arr, n)).all()
-
 
 # ---- star-contraction formulation (pure-Python mirror of algos/wcc.py's
 # DataFrame ops) — hypothesis-checked against the oracle so the algorithm
