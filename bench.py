@@ -183,7 +183,12 @@ def main() -> None:
 
     tri_edges = gen_bench_edges(spark, 200_000, 1_000_000).persist()
     tri_edges.count()
-    timed_min("triangle_counts", lambda: triangle_counts(spark, tri_edges).count())
+    # the sum needs every per-vertex count; a bare .count() of the result
+    # is answered from the vertex ids alone, without computing tri
+    timed_min(
+        "triangle_counts",
+        lambda: triangle_counts(spark, tri_edges).agg(F.sum("tri")).collect(),
+    )
 
     # ---- relational headliners at the sf dir
     from linkgraph.driver_queries import (

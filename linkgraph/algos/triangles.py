@@ -77,14 +77,12 @@ def triangle_counts(
     exchange. A packed-adjacency variant scaled worse across JVMs;
     verdict in BENCH/BASELINE.md, "Triangle kernel A/B".
 
-    Deliberately UNCACHED: the multiply-referenced subtrees (und,
-    oriented) end in shuffles, and Spark's ReusedExchange dedups
-    identical exchange subtrees at execution — so nothing is recomputed
-    per reference, while persisting these intermediates measured ~8x
-    slower (forced materialization + InMemoryRelation scan overhead in
-    place of a streamed exchange reuse)."""
-    und = _canonical_undirected(edges)
-    oriented = _oriented_edges(und)
+    The oriented edge set is materialized ONCE (eager localCheckpoint),
+    and both joins — the wedge self-join and the closure join — read that
+    one O(E) image. Left lazy, every branch re-planned und → deg → key →
+    orientation: under AQE no exchange is reused across branches, and a
+    collect of the counts ran 91 Spark jobs and 94 input scans."""
+    oriented = _oriented_edges(_canonical_undirected(edges)).localCheckpoint(eager=True)
     ids = vertices.select("id") if vertices is not None else vertex_ids_from_edges(edges)
 
     e1 = oriented.select(F.col("lo").alias("u"), F.col("hi").alias("v"), F.col("key_hi").alias("kv"))
@@ -122,8 +120,6 @@ def cycle_triangle_counts(
     degree-min anchoring is the same hub-safety argument as the
     undirected orientation — a hub generates wedges only toward its few
     higher-degree neighbors, never out-deg × in-deg."""
-    # uncached like triangle_counts: ReusedExchange dedups the shared
-    # shuffle subtrees; persisting measured far slower
     e = (
         edges.select("src_id", "dst_id")
         .filter(F.col("src_id") != F.col("dst_id"))
@@ -139,8 +135,13 @@ def cycle_triangle_counts(
     key = deg.select("id", F.struct(F.col("deg").alias("d"), F.col("id").alias("i")).alias("key"))
     ks = key.select(F.col("id").alias("src_id"), F.col("key").alias("key_s"))
     kd = key.select(F.col("id").alias("dst_id"), F.col("key").alias("key_d"))
-    keyed = e.join(ks, "src_id").join(kd, "dst_id").select(
-        "src_id", "dst_id", "key_s", "key_d"
+    # materialized once, like triangle_counts' oriented set: the wedge
+    # join's two sides and the closure join all read this one image
+    keyed = (
+        e.join(ks, "src_id")
+        .join(kd, "dst_id")
+        .select("src_id", "dst_id", "key_s", "key_d")
+        .localCheckpoint(eager=True)
     )
     out_m = keyed.filter(F.col("key_s") < F.col("key_d")).select(
         F.col("src_id").alias("m"), F.col("dst_id").alias("x"), F.col("key_d").alias("key_x")
@@ -153,7 +154,7 @@ def cycle_triangle_counts(
         .filter(F.col("x") != F.col("y"))
         .select("m", "x", "y")
     )
-    closer = e.select(F.col("src_id").alias("x"), F.col("dst_id").alias("y"))
+    closer = keyed.select(F.col("src_id").alias("x"), F.col("dst_id").alias("y"))
     cycles = wedges.join(closer, ["x", "y"], "inner")  # m -> x -> y -> m
     members = (
         cycles.select(F.col("m").alias("id"))

@@ -587,7 +587,9 @@ def link_store_triangles_poll(
         n_edges = edges.count()
         und_path = f"{state_dir}/und"
         tri_path = f"{state_dir}/tri"
-        cur_und = _canonical_undirected(edges)
+        # materialized before branching: the delta anti-join and the
+        # commit both read it, and it must not be re-derived per branch
+        cur_und = _canonical_undirected(edges).localCheckpoint(eager=True)
         prev_und = read_committed_or_none(spark, und_path, "a long, b long")
         prev_tri = read_committed_or_none(spark, tri_path, "id long, tri long")
         # the delta path needs BOTH state dirs to reflect the store as it
@@ -608,7 +610,11 @@ def link_store_triangles_poll(
             and tri_meta.get("merged_through") == prev_merged
         )
         if incremental:
-            delta = cur_und.join(prev_und, ["a", "b"], "left_anti")
+            # triangle_counts_delta reads D three times (and U = O ∪ D
+            # three more): one image instead of one anti-join per read
+            delta = cur_und.join(prev_und, ["a", "b"], "left_anti").localCheckpoint(
+                eager=True
+            )
             gained = triangle_counts_delta(spark, prev_und, delta).withColumnRenamed(
                 "tri", "tri_new"
             )
@@ -625,10 +631,9 @@ def link_store_triangles_poll(
             )
         else:
             tri = triangle_counts(spark, edges)
-        # both outputs are lazy plans over the parquet they are about to
-        # replace (prev und/tri) — break before the staged swaps
+        # tri is a lazy plan over the parquet it is about to replace
+        # (prev und/tri) — break before the staged swaps
         tri = tri.localCheckpoint(eager=True)
-        cur_und = cur_und.localCheckpoint(eager=True)
         stamp = {"merged_through": mstats["merged_through"]}
         committed_overwrite(spark, tri, tri_path, meta=stamp)
         committed_overwrite(spark, cur_und, und_path, meta=stamp)
